@@ -60,8 +60,9 @@ object DeleteStrategies {
     // id, so aggregating non-matching state rows is pure waste — and the
     // state side is unbounded (everything the sink holds) while the
     // delete side is one micro-batch's tombstones, small by
-    // construction, hence the explicit broadcast of its key set
-    val delIds = broadcast(deletes.select(col("id")).distinct())
+    // construction, hence the explicit broadcast of its key set (no
+    // dedup: duplicate keys on a semi-join's build side change nothing)
+    val delIds = broadcast(deletes.select(col("id")))
     val counts = sinkState
       .join(delIds.withColumnRenamed("id", stateIdCol), Seq(stateIdCol),
         "left_semi")

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Last-writer-wins upsert resolution (SURVEY §2.8 T4 + §2.9 K1/K2).
@@ -32,6 +33,12 @@ object Upsert {
     if (df.columns.contains("namespace")) Seq("namespace", keyCol)
     else Seq(keyCol)
 
+  /** The last-writer-wins order: the op with the greatest
+    * (version, tieBreak) wins its key. Both [[lastWriterWins]] and
+    * [[withWinnerFlag]] rank by this one definition. */
+  private def lwwOrder(versionCol: String, tieBreak: String): Column =
+    struct(col(versionCol), col(tieBreak))
+
   /** Keep exactly the winning op per key, with deterministic tie-break. */
   def lastWriterWins(df: DataFrame, keyCol: String = "id",
                      versionCol: String = "version",
@@ -40,8 +47,26 @@ object Upsert {
     val keys = identityCols(df, keyCol).zipWithIndex
       .map { case (k, i) => col(k).as(s"__lww_k$i") }
     df.groupBy(keys: _*)
-      .agg(max_by(payload, struct(col(versionCol), col(tieBreak))).as("__lww_w"))
+      .agg(max_by(payload, lwwOrder(versionCol, tieBreak)).as("__lww_w"))
       .select(col("__lww_w.*"))
+  }
+
+  /** [[lastWriterWins]] as a flag instead of a reduction: every row of
+    * `df` is kept, and `flagCol` is true on exactly the one row per key
+    * that [[lastWriterWins]] over `df.filter(eligible)` would return
+    * (false elsewhere, ineligible rows included). A frame that feeds
+    * both the live documents and the tombstones ranks once and filters
+    * twice, where two [[lastWriterWins]] calls would shuffle twice.
+    *
+    * Scale: a window ranks by a per-key sort with no map-side combine,
+    * so this is for batch-bounded frames (one micro-batch); an unbounded
+    * history with hot keys belongs to [[lastWriterWins]]. */
+  def withWinnerFlag(df: DataFrame, eligible: Column,
+                     flagCol: String): DataFrame = {
+    val ok = coalesce(eligible, lit(false))
+    val w = Window.partitionBy(identityCols(df).map(col): _*)
+      .orderBy(ok.desc, lwwOrder("version", "event_id").desc)
+    df.withColumn(flagCol, ok && row_number().over(w) === 1)
   }
 
   /** Final sink state: winners whose last op is not a delete. The companion
@@ -79,7 +104,7 @@ object Upsert {
                     keyCol: String = "id", versionCol: String = "version",
                     tieBreak: String = "event_id"): DataFrame = {
     val isData = col("operation").isin("i", "u")
-    val ord = struct(col(versionCol), col(tieBreak))
+    val ord = lwwOrder(versionCol, tieBreak)
     val aggs = fields.map { f =>
       max(when(isData && col(f).isNotNull,
         struct(col(versionCol), col(tieBreak), col(f).as("v"))))

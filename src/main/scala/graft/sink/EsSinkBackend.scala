@@ -2,7 +2,6 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.config.GraftConfig
 import graft.streaming.RetryingSink
@@ -41,7 +40,9 @@ trait EsTransport extends Serializable {
     * connector READ of the sink indices (scale: the coordinate set is
     * index-sized) — this transport-level hook exists so the skeleton is
     * testable without a cluster; it materializes on the driver and is
-    * therefore mock/test-sized by contract. */
+    * therefore mock/test-sized by contract. [[EsSinkBackend.sinkState]]
+    * hands the list to Spark as an RDD ([[SinkBackend.stateView]]),
+    * never as a plan-embedded local relation. */
   def scanState(): Seq[(String, String, String, String)]
 }
 
@@ -132,15 +133,15 @@ class EsSinkBackend(transport: EsTransport,
       }
   }
 
-  /** K3: control-plane sized — the pattern list collects (it is the
-    * distinct drop set of one batch) and each index deletion is one
-    * transport call, `prefix` kinds as a trailing-star expression. */
+  /** K3: control-plane sized — the pattern list collects and dedupes on
+    * the driver (it is the drop set of one batch) and each index deletion
+    * is one transport call, `prefix` kinds as a trailing-star
+    * expression. */
   override def dropIndexes(drops: DataFrame): Unit =
-    drops.select(col("kind"), col("pattern")).distinct().collect()
-      .foreach { r =>
-        val p = r.getString(1)
-        transport.deleteIndex(
-          if (r.getString(0) == "exact") p else p + "*")
+    drops.select(col("kind"), col("pattern")).collect()
+      .map(r => (r.getString(0), r.getString(1))).distinct
+      .foreach { case (kind, p) =>
+        transport.deleteIndex(if (kind == "exact") p else p + "*")
       }
 
   /** K4: append-only dated history. The bulk id is the DETERMINISTIC
@@ -195,16 +196,7 @@ class EsSinkBackend(transport: EsTransport,
         "coordinate rows — the driver-side scan is mock/test-sized by " +
         "contract; back sinkState with a connector READ of the sink " +
         "indices (or raise EsSinkConfig.maxScanStateRows deliberately)")
-    val rows = scanned.map { case (ns, id, ix, rt) =>
-      Row(ns, id, ix, rt)
-    }
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("namespace", StringType),
-        StructField("id", StringType),
-        StructField("meta_index", StringType),
-        StructField("meta_routing", StringType))))
+    SinkBackend.stateView(spark, scanned)
   }
 }
 

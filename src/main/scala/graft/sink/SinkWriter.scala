@@ -3,6 +3,7 @@ package graft.sink
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -34,7 +35,8 @@ import graft.operators.{DeleteStrategies, Quarantine, Routing, TimeMachine, Upse
   * output of the already-bounded operators (LWW winners, resolved
   * tombstones, control-plane drop patterns); a real backend partitions
   * its bulk requests from these frames (`foreachPartition` → bulk API)
-  * and serves `sinkState` from its own index — nothing here collects.
+  * and serves `sinkState` from its own index. The writer collects only
+  * the batch's drop ops, which are control-plane sized.
   */
 trait SinkBackend {
 
@@ -90,7 +92,11 @@ trait SinkBackend {
   def quarantine(rejects: DataFrame): Unit = ()
 
   /** What the sink holds now: (namespace, id, meta_index, meta_routing)
-    * — the delete-resolution view. */
+    * — the delete-resolution view, read once per batch that resolves
+    * deletes. Its plan must be RDD-backed (a connector read, or
+    * [[SinkBackend.stateView]] over a driver-held list), never a
+    * plan-embedded local relation: every optimizer rule of every delete
+    * resolution would walk an index-sized LocalRelation row by row. */
   def sinkState(spark: SparkSession): DataFrame
 
   /** Apply every PRE-DELETE layer of one batch — the quarantine channel,
@@ -118,6 +124,25 @@ trait SinkBackend {
     dropIndexes(drops)
     bulkUpsert(upserts)
   }
+}
+
+object SinkBackend {
+
+  /** The [[SinkBackend.sinkState]] columns. */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("namespace", StringType),
+    StructField("id", StringType),
+    StructField("meta_index", StringType),
+    StructField("meta_routing", StringType)))
+
+  /** A driver-held (namespace, id, meta_index, meta_routing) list as a
+    * sink view backed by an RDD, so the plan holds a reference to the
+    * rows rather than the rows themselves; the tuples become Rows in the
+    * tasks, not on the driver. */
+  def stateView(spark: SparkSession,
+                rows: Seq[(String, String, String, String)]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows).map(Row.fromTuple), StateSchema)
 }
 
 /** One `foreachBatch` writer driving all four op kinds through a
@@ -155,37 +180,50 @@ object SinkWriter {
       if (batch.columns.contains("meta_index")) batch
       else Routing.withMeta(Routing.extractDocMeta(batch), cfg.mappings,
         quarantine = true)
-    // materialized for the batch only (streaming-twin contract): up to
-    // five consumers below, released before returning. localCheckpoint —
-    // not persist — because every downstream JOB (the pre-delete layer
-    // job, the delete resolution, a composite's follow-on reads) would
-    // otherwise re-analyze and re-optimize the full envelope→route
-    // logical plan just to hit the cache at physical planning; the
-    // envelope's from_json + relate fan-out tree is large enough that
-    // driver planning, not executor work, dominated the measured wall
-    // (q171/q91 stage probe: Σ task run-time ≈ 1.3 s of a 7.8 s wall).
-    // Checkpointing truncates the plan to the materialized RDD for every
-    // consumer (guide §7.3, the q189 remedy). Batch-sized, same contract.
-    val tagged = routed0.localCheckpoint(true)
     // the rejects side output: every tagged op reaches the backend's
     // quarantine channel (reject-sized frame); FATAL reasons (unkeyable
     // id) then leave the sink-bound flow entirely — the reference skips
     // them with an error log (monstache.go:3167-3171). A pre-routed
     // batch without the tag column (a caller that ran withMeta in
     // filter mode upstream) has nothing to report.
-    val hasTags = tagged.columns.contains(Quarantine.ReasonCol)
-    val b =
-      if (!hasTags) tagged
-      else tagged.filter(Quarantine.keep(col(Quarantine.ReasonCol)))
-        .drop(Quarantine.ReasonCol)
+    val hasTags = routed0.columns.contains(Quarantine.ReasonCol)
+    val keep =
+      if (!hasTags) lit(true) else Quarantine.keep(col(Quarantine.ReasonCol))
+    // strategy 2 (ignore) drops delete ops before LAST-WRITER-WINS — the
+    // reference never replays them, so a key whose last in-batch op is a
+    // delete still indexes its prior data op (the same pre-LWW filter
+    // ConfiguredPipeline.indexedDocuments/startStream apply; resolving it
+    // after LWW would let the dead delete eat the winner).
+    val lwwEligible =
+      if (cfg.deleteStrategy == 2) keep && col("operation") =!= "d" else keep
+    // materialized for the batch only (streaming-twin contract), with the
+    // batch's ONE last-writer-wins ranking computed inside the same job:
+    // the live documents and the tombstones are both filters on the
+    // winner flag, not two more shuffles. localCheckpoint — not persist —
+    // because every downstream JOB (the pre-delete layers, the delete
+    // resolution) would otherwise re-analyze and re-optimize the full
+    // envelope→route logical plan just to hit the cache at physical
+    // planning; the envelope's from_json + relate fan-out tree is large
+    // enough that driver planning, not executor work, dominated the
+    // measured wall (q171/q91 stage probe: Σ task run-time ≈ 1.3 s of a
+    // 7.8 s wall). Checkpointing truncates the plan to the materialized
+    // RDD for every consumer (guide §7.3, the q189 remedy). The blocks
+    // are executor-local and unreplicated: losing an executor mid-batch
+    // fails the batch, and the stream's checkpoint replays it.
+    val tagged = Upsert.withWinnerFlag(routed0, lwwEligible, WinnerCol)
+      .localCheckpoint(true)
     try {
+      val kept =
+        if (!hasTags) tagged
+        else tagged.filter(keep).drop(Quarantine.ReasonCol)
+      val b = kept.drop(WinnerCol)
       // the pre-delete layer frames, in replay order: quarantine rows
       // (every tagged op reaches the channel), K4 history (every version
-      // appends, before dedup/fences and before the strategy-2 delete
-      // filter below: the time machine is the audit trail, and an
-      // IGNORED delete is still an op that happened), K3 drops, K1
-      // upserts — handed to the backend as ONE call so a driver-side
-      // backend can materialize them in one job (guide §2.6)
+      // appends, before LWW/fences and regardless of strategy 2: the time
+      // machine is the audit trail, and an IGNORED delete is still an op
+      // that happened), K3 drops, K1 upserts — handed to the backend as
+      // ONE call so a driver-side backend can materialize them in one
+      // job (guide §2.6)
       val quarRows =
         if (!hasTags) None
         else Some(tagged
@@ -198,60 +236,54 @@ object SinkWriter {
           cfg.timeMachineNamespaces, cfg.timeMachineIndexPrefix,
           cfg.timeMachineIndexSuffix))
 
-      // strategy 2 (ignore) drops delete ops before LAST-WRITER-WINS —
-      // the reference never replays them, so a key whose last in-batch
-      // op is a delete still indexes its prior data op (the same
-      // pre-LWW filter ConfiguredPipeline.indexedDocuments/startStream
-      // apply; resolving it after LWW would let the dead delete eat the
-      // winner). Applied AFTER the history append, which audits all ops.
-      val ops = if (cfg.deleteStrategy == 2) DeleteStrategies.ignore(b)
-                else b
+      // K3 drops: control-plane sized, so they collect ONCE to the driver
+      // as (is drop_coll, index pattern, fence key, version). Patterns
+      // resolve through the same [[mapping]] table as data ops so a mapped
+      // collection's drop deletes the index its documents actually landed
+      // in; a drop_coll fences its namespace, a drop_db its db.
+      val isColl = col("operation") === "drop_coll"
+      val drops = b.filter(
+          (isColl && lit(cfg.droppedCollections)) ||
+            (col("operation") === "drop_db" && lit(cfg.droppedDatabases)))
+        .select(isColl,
+          when(isColl, Routing.resolveIndex(cfg.mappings))
+            .otherwise(concat(lower(col("db")), lit("."))),
+          when(isColl, lower(col("namespace"))).otherwise(lower(col("db"))),
+          col("version"))
+        .collect().toSeq
+      val dropRows = spark.createDataFrame(
+        java.util.Arrays.asList(drops.map(d =>
+          Row(if (d.getBoolean(0)) "exact" else "prefix", d.getString(1)))
+          .distinct: _*),
+        StructType(Seq(StructField("kind", StringType),
+          StructField("pattern", StringType))))
 
-      // K3 drops: control-plane sized; patterns resolve through the same
-      // [[mapping]] table as data ops so a mapped collection's drop
-      // deletes the index its documents actually landed in
-      val dropOps = b.filter(
-        (col("operation") === "drop_coll" && lit(cfg.droppedCollections)) ||
-          (col("operation") === "drop_db" && lit(cfg.droppedDatabases)))
-      val drops = dropOps.select(col("operation").as("d_op"),
-        lower(col("namespace")).as("d_ns"), lower(col("db")).as("d_db"),
-        col("version").as("d_version"),
-        when(col("operation") === "drop_coll",
-          Routing.resolveIndex(cfg.mappings)).as("d_index"))
-      val dropRows = drops.select(
-        when(col("d_op") === "drop_coll", "exact").otherwise("prefix")
-          .as("kind"),
-        when(col("d_op") === "drop_coll", col("d_index"))
-          .otherwise(concat(col("d_db"), lit(".")))
-          .as("pattern"))
-
-      // in-batch drop fence: data ops at or below their namespace's last
-      // covering drop were wiped before they could land
-      val nsFence = b.select(lower(col("namespace")).as("ix"),
-          lower(col("db")).as("ix_db")).distinct()
-        .join(broadcast(drops),
-          (col("d_op") === "drop_coll" && col("ix") === col("d_ns")) ||
-            (col("d_op") === "drop_db" && col("ix_db") === col("d_db")),
-          "left")
-        .groupBy("ix").agg(max(col("d_version")).as("fence_v"))
-      def fenced(df: DataFrame): DataFrame =
-        df.join(broadcast(nsFence), lower(col("namespace")) === col("ix"),
-            "left")
-          .filter(col("fence_v").isNull || col("version") > col("fence_v"))
-          .drop("ix", "fence_v")
+      // in-batch drop fence: a winner at or below the last drop covering
+      // its namespace was wiped before it could land
+      val covered = drops.filter(d => !d.isNullAt(2) && !d.isNullAt(3))
+        .groupMapReduce(d => (d.getBoolean(0), d.getString(2)))(
+          _.getLong(3))(math.max)
+        .map { case ((coll, key), v) =>
+          lower(col(if (coll) "namespace" else "db")) === key &&
+            col("version") <= v
+        }
+      val winners = kept.filter(
+          if (covered.isEmpty) col(WinnerCol)
+          else col(WinnerCol) && !coalesce(covered.reduce(_ || _), lit(false)))
+        .drop(WinnerCol)
 
       // K1 bulk upsert: the batch's LWW winners that outlive any drop.
       // One backend call applies quarantine + history + drops + upserts
       // in replay order; deletes follow below (they read the POST-upsert
       // sink state).
       backend.applyPreDelete(quarRows, histRows, dropRows,
-        fenced(Upsert.liveDocuments(ops)))
+        winners.filter(col("operation").isin("i", "u")))
 
       // K2 deletes, resolved per configured strategy against the
       // POST-upsert sink state, normalized to (id, del_index,
       // del_routing, del_version) — the tombstone's own version rides
       // along so the backend can enforce the versioned-delete fence
-      val tombs = fenced(Upsert.tombstones(ops))
+      val tombs = winners.filter(col("operation") === "d")
       cfg.deleteStrategy match {
         case 2 => // ignore: deletes are dropped (monstache.go:4068-4070)
         case 1 =>
@@ -281,15 +313,26 @@ object SinkWriter {
               col("hit_routing").as("del_routing"),
               col("version").as("del_version")))
       }
-    } finally tagged.queryExecution.analyzed match {
-      // release the checkpoint's backing blocks NOW (Dataset.unpersist is
-      // a cache-manager no-op for a checkpointed frame; without this a
-      // long-lived stream would hold every batch's blocks until GC)
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(false); ()
-      case _ => tagged.unpersist(false); ()
-    }
+    } finally release(tagged)
   }
+
+  /** The per-row last-writer-wins flag [[writeBatch]] checkpoints. */
+  private val WinnerCol = "__lww_winner"
+
+  /** Release a checkpointed frame's backing blocks NOW. Dataset.unpersist
+    * is a cache-manager no-op for a checkpointed frame, so without this a
+    * long-lived stream would hold every batch's blocks until GC. The
+    * blocks are reachable only through the LogicalRDD a checkpoint plans
+    * to; any other plan shape (a Spark upgrade that wraps it) fails the
+    * batch loudly instead of leaking every batch's blocks in silence. */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.unpersist(false); ()
+      case other => throw new IllegalStateException(
+        "SinkWriter: a localCheckpoint frame planned as " +
+          s"${other.getClass.getName}, not LogicalRDD; its blocks cannot " +
+          "be released")
+    }
 
   /** Continuous form: envelope stream → optional transform → the batch
     * writer, checkpointed. The transform is where
@@ -451,16 +494,8 @@ class InMemorySinkBackend extends SinkBackend {
     }
   }
 
-  override def sinkState(spark: SparkSession): DataFrame = {
-    val rows = state.toSeq.map { case ((ix, id), d) =>
-      Row(d.namespace, id, ix, d.routing)
-    }
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*),
-      StructType(Seq(
-        StructField("namespace", StringType),
-        StructField("id", StringType),
-        StructField("meta_index", StringType),
-        StructField("meta_routing", StringType))))
-  }
+  override def sinkState(spark: SparkSession): DataFrame =
+    SinkBackend.stateView(spark, state.toSeq.map { case ((ix, id), d) =>
+      (d.namespace, id, ix, d.routing)
+    })
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -215,6 +216,81 @@ class SinkWriterSpec extends AnyFunSuite {
     SinkWriter.writeBatch(Seq(ev(1, "5", "app.t0", "d", 20)).toDF(),
       GraftConfig(deleteStrategy = 1), backend)
     assert(backend.state.isEmpty)
+  }
+
+  test("drop fence and last-writer-wins across strategies 0, 1 and 2") {
+    import spark.implicits._
+    def cfgS(strategy: Int) = GraftConfig(
+      mappings = Map("app.t1" -> "custom_t1", "other.y" -> "y_idx"),
+      timeMachineNamespaces = Seq("app.t0"), deleteStrategy = strategy)
+    val seed = Seq(
+      ev(0, "1", "app.t0", "i", 10),
+      ev(1, "2", "app.t1", "i", 11),
+      ev(2, "3", "other.x", "i", 12),
+      ev(3, "4", "app.t1", "i", 13),
+      ev(4, "9", "other.y", "i", 14))
+    val batch = Seq(
+      drop(20, "app.t1", "drop_coll", 30),     // wipes custom_t1 (mapped)
+      drop(21, "other", "drop_db", 40),        // wipes the other.* prefix
+      ev(22, "3", "other.x", "u", 39),         // FENCED: below the drop_db
+      ev(23, "7", "other.x", "i", 41),         // outlives the drop_db
+      ev(24, "2", "app.t1", "u", 29),          // FENCED: below the drop_coll
+      ev(25, "8", "app.t1", "i", 31),          // outlives the drop_coll
+      // a tombstone whose winner precedes the drop_db: fenced, so it never
+      // reaches delete resolution, and y_idx lies outside the other.*
+      // prefix the drop wipes
+      ev(27, "9", "other.y", "d", 35),
+      ev(29, "1", "app.t0", "d", 50),          // resolves (strategies 0, 1)
+      // the fence compares namespaces case-insensitively; App.T1 is not
+      // the mapped app.t1, so it indexes into lower-cased app.t1
+      ev(30, "10", "App.T1", "i", 25),         // FENCED by app.t1's drop
+      ev(31, "11", "App.T1", "i", 32),
+      // equal versions: the higher event_id wins, wherever it sits
+      ev(41, "12", "app.t0", "u", 60, """{"a":"high"}"""),
+      ev(40, "12", "app.t0", "i", 60, """{"a":"low"}"""),
+      ev(50, "", "app.t0", "i", 70))           // FATAL: empty id
+    val landed = Map(
+      ("y_idx", "9") -> 14L, ("other.x", "7") -> 41L,
+      ("custom_t1", "8") -> 31L, ("app.t1", "11") -> 32L,
+      ("app.t0", "12") -> 60L)
+    val day = "log.app.t0.1970-01-01"
+    val expected = Map(
+      0 -> landed, 1 -> landed, 2 -> (landed + (("app.t0", "1") -> 10L)))
+    expected.foreach { case (strategy, want) =>
+      val backend = new InMemorySinkBackend
+      SinkWriter.writeBatch(seed.toDF(), cfgS(strategy), backend)
+      SinkWriter.writeBatch(batch.toDF(), cfgS(strategy), backend)
+      assert(backend.state.map { case (k, d) => k -> d.version }.toMap == want,
+        s"strategy $strategy")
+      assert(backend.state(("app.t0", "12")).document == """{"a":"high"}""")
+      // every kept app.t0 op appends, the ignored strategy-2 delete too
+      assert(backend.history.toSeq.sortBy(_._3) == Seq(
+        (day, "1", 10L), (day, "1", 50L), (day, "12", 60L), (day, "12", 60L)),
+        s"strategy $strategy")
+      assert(backend.rejected.toSeq ==
+        Seq((50L, "app.t0", "i", "empty_id")), s"strategy $strategy")
+    }
+  }
+
+  test("checkpoint blocks are released on success and on backend failure") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val b = Seq(ev(0, "1", "app.t0", "i", 10), ev(1, "2", "app.t0", "d", 11))
+    val before = sc.getPersistentRDDs.keySet
+    SinkWriter.writeBatch(b.toDF(), cfg, new InMemorySinkBackend)
+    assert(sc.getPersistentRDDs.keySet == before,
+      "a successful batch left its checkpoint persisted")
+    val failing = new InMemorySinkBackend {
+      override def applyPreDelete(q: Option[DataFrame], h: Option[DataFrame],
+                                  drops: DataFrame,
+                                  upserts: DataFrame): Unit =
+        throw new IllegalStateException("backend down")
+    }
+    val e = intercept[IllegalStateException](
+      SinkWriter.writeBatch(b.toDF(), cfg, failing))
+    assert(e.getMessage == "backend down")
+    assert(sc.getPersistentRDDs.size == before.size,
+      "a failed batch leaked its checkpoint blocks")
   }
 
   test("startSink runs the config-driven hot path into the backend") {

@@ -5,12 +5,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.config.GraftConfig
+import graft.source.ChangeEvent
 
 /** Static recording surface for the mock transport: `foreachPartition`
   * serializes the transport into executor closures, so a plain field
@@ -247,6 +249,71 @@ class EsSinkBackendSpec extends AnyFunSuite {
     val ok = new EsSinkBackend(new MockEsTransport(key, state = big.take(5)),
       EsSinkConfig(maxScanStateRows = 5))
     assert(ok.sinkState(spark).count() == 5)
+  }
+
+  /** Spark jobs `body` starts on this thread. A marker job after `body`
+    * bounds the count: the listener bus delivers job starts in order, so
+    * once the marker's arrives, every job of `body` has been seen. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val run = java.util.UUID.randomUUID.toString
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)).orNull match {
+          case `run` => seen.incrementAndGet()
+          case m if m == run + "/marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, run)
+      body
+      sc.setLocalProperty(tag, run + "/marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      seen.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("one writeBatch runs a pinned number of Spark jobs") {
+    import spark.implicits._
+    val key = "es-jobs"; EsMock.reset(key)
+    def ev(eid: Long, id: String, ns: String, op: String, ver: Long) = {
+      val Array(db, coll) = ns.split("\\.", 2)
+      ChangeEvent(eid, id, db, coll, ns, op, ver * 1000L, ver,
+        if (op == "d") null else s"""{"v":$ver}""", 0.0, "oplog")
+    }
+    val batch = Seq(
+      ev(0, "1", "app.t0", "i", 10), ev(1, "1", "app.t0", "u", 11),
+      ev(2, "2", "app.t0", "d", 12), ev(3, "3", "app.t1", "i", 13),
+      ev(4, "4", "app.t1", "d", 14), ev(5, "5", "app.t2", "u", 15),
+      ChangeEvent(6, null, "app", null, "app.t2", "drop_coll", 16000L, 16L,
+        null, 0.0, "oplog"),
+      ev(7, "6", "app.t2", "i", 17))
+    val held = Seq(("app.t0", "2", "app.t0", null: String),
+      ("app.t1", "4", "app.t1", null: String),
+      ("app.t2", "5", "app.t2", null: String))
+    val backend = new EsSinkBackend(new MockEsTransport(key, held),
+      sleep = _ => ())
+    val cfg = GraftConfig(timeMachineNamespaces = Seq("app.t0"))
+    val jobs = jobsOf(SinkWriter.writeBatch(batch.toDF(), cfg, backend))
+    assert(EsMock.q(EsMock.indexDrops, key).asScala.toSeq == Seq("app.t2"))
+    val actions = EsMock.q(EsMock.payloads, key).asScala.toSeq
+      .flatMap(_.split("\n"))
+    assert(actions.count(_.contains("log.app.t0.")) == 3)
+    assert(actions.count(_.startsWith("""{"delete"""")) == 2)
+    assert(actions.count(_.startsWith("""{"index":{"_index":"app.t""")) == 3)
+    // the checkpoint with its one LWW ranking, the drop collect, the
+    // quarantine/history/upsert bulk jobs and the delete resolution; a
+    // change that brings back per-layer recomputation raises this count
+    assert(jobs == 10, s"writeBatch ran $jobs Spark jobs")
   }
 
   test("action metadata JSON-escapes quotes, backslashes, controls") {
