@@ -4,8 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Measurement shim for the optimization rounds — exposes cleanVec's
-  * algebra to [[graft.ScratchProbe]] without widening Similarity's API.
-  * Not part of the engine's query surface. */
+  * algebra to sub-plan timers outside the `llm` package without widening
+  * Similarity's API. Not part of the engine's query surface. */
 object SimProbe {
   def clean(c: Column): Column = {
     val broken = exists(c, x => {

@@ -10,11 +10,12 @@ import graft.operators.Upsert
 import graft.source.ChangeEvent
 
 /** The 100 TB shape of [[StreamingUpsert]]'s durable state: state bucketed
-  * by `hash(id)`, so a micro-batch rewrites ONLY the buckets it touches
-  * instead of the whole table. [[StreamingUpsert.mergeBatch]] rewrites
-  * full state per batch — correct while state fits a few GB; at terabyte
-  * state the rewrite dominates. Here each bucket keeps its own version
-  * chain `stateDir/b<bucket>/v<batchId>`:
+  * by `hash(id)`, so a micro-batch rewrites ONLY the buckets it touches.
+  * [[StreamingUpsert.mergeBatch]] writes a per-batch delta and rewrites
+  * the whole table once the deltas reach its size — at terabyte state even
+  * that periodic rewrite dominates, and every read folds the deltas. Here
+  * each bucket keeps its own full-version chain
+  * `stateDir/b<bucket>/v<batchId>`:
   *
   *  - a batch groups by bucket, and per touched bucket merges the bucket's
   *    latest version strictly below the batch id with the batch slice —

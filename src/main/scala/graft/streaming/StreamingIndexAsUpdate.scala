@@ -138,7 +138,8 @@ object StreamingIndexAsUpdate {
   }
 
   /** Idempotent merge of one micro-batch into the versioned partial
-    * state — the same protocol as [[StreamingUpsert.mergeBatch]]. */
+    * state: a full rewrite per batch, the compaction step of
+    * [[StreamingUpsert.mergeBatch]]'s protocol. */
   def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String,
                  fields: Seq[String]): Unit = {
     val spark = batch.sparkSession

@@ -17,53 +17,61 @@ import graft.source.ChangeEvent
   * the checkpoint after a crash; correctness is restored by *idempotent*
   * per-batch state merges keyed on (id, version) — exactly how the
   * reference leans on ES external versioning instead of ordering. Each
-  * micro-batch writes state version `v<batchId>`; a replayed batch
-  * overwrites its own output deterministically, so duplicate delivery
-  * cannot double-apply.
+  * micro-batch writes one state version named by its batch id; a replayed
+  * batch overwrites its own output deterministically, so duplicate
+  * delivery cannot double-apply.
   *
-  * Scale path: this file's merge rewrites full state per batch, which is
-  * right for state that fits a few GB. At 100 TB state the same contract
-  * holds with (a) state bucketed by `hash(id)` so only buckets touched by
-  * the batch rewrite, or (b) [[latestWinners]]'s keyed-state variant backed
-  * by the RocksDB state store. The operator semantics are identical.
+  * Scale path: a micro-batch writes only its own last-writer-wins winners,
+  * as a delta version on top of the last full one, the way the reference
+  * applies each op to the one document it touches (`doIndexing`/`doDelete`,
+  * monstache.go:3160-3251, 4065-4147). The full state is rewritten only
+  * when the deltas have grown to the full version's size (the chain and
+  * its compaction live in [[VersionedState.mergeChained]]), so each
+  * ingested byte is rewritten about twice whatever the state's size. A
+  * read folds at most one state-size of deltas into the full version.
+  * Beyond what one rewrite per state-size of ops can carry, the same
+  * contract holds with (a) state bucketed by `hash(id)` so only touched
+  * buckets rewrite ([[BucketedState]]), or (b) [[latestWinners]]'s
+  * keyed-state variant backed by the RocksDB state store. The operator
+  * semantics are identical.
   */
 object StreamingUpsert {
 
   /** Latest committed state strictly before `beforeBatch` (a replayed batch
-    * must merge against its predecessor, never its own partial output).
+    * must merge against its predecessor, never its own partial output):
+    * the newest full version unchanged, or, when deltas follow it, one
+    * scan over the full version and its deltas folded by last-writer-wins.
     * "Committed" = carries the `_SUCCESS` job-commit marker — a version
     * torn by a crash mid-write is invisible here, so recovery reads the
     * intact predecessor (see [[VersionedState]]). */
   def latestState(spark: SparkSession, stateDir: String,
                   beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
-    VersionedState.versions(spark, stateDir).find(_ < beforeBatch)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
+    VersionedState.readChained(spark, stateDir, beforeBatch)(Upsert.lastWriterWins(_))
 
   /** Seed the state with a direct-read backfill snapshot BEFORE the
     * stream starts (SURVEY §3.2: initial sync, then tail from the
     * snapshot's timestamp). Written as version -1 so the stream's FIRST
     * micro-batch (batchId 0) merges against it — `mergeBatch(_, 0)` only
     * consults versions strictly below the batch id, so a snapshot at v0
-    * would be invisible to batch 0 and silently overwritten. */
-  def seedState(snapshot: DataFrame, stateDir: String): Unit =
+    * would be invisible to batch 0 and silently overwritten. A dir that
+    * already holds a committed version is a loud error: the seed would
+    * sit below it, and no reader would ever see the snapshot. */
+  def seedState(snapshot: DataFrame, stateDir: String): Unit = {
+    val held = VersionedState.listing(snapshot.sparkSession, stateDir)
+    require(held.isEmpty,
+      s"state dir $stateDir already holds committed versions " +
+        s"${held.map(_.name).mkString(",")}; a seed written below them " +
+        "would never be read — seed a fresh state dir")
     Upsert.lastWriterWins(snapshot)
       .write.mode("overwrite").parquet(s"$stateDir/v-1")
-
-  /** Idempotent merge of one micro-batch into the versioned state. One
-    * directory listing serves the guard, the predecessor lookup, and the
-    * GC (on object stores the listings dominate small merges). */
-  def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val vs = VersionedState.versions(spark, stateDir)
-    VersionedState.requireNoNewerThan(vs, stateDir, batchId)
-    val prev = vs.find(_ < batchId)
-      .map(v => spark.read.parquet(s"$stateDir/v$v"))
-    val merged = Upsert.lastWriterWins(
-      prev.map(_.unionByName(batch)).getOrElse(batch))
-    merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-    // GC: keep this version and its predecessor (crash-recovery window)
-    VersionedState.gcBefore(spark, stateDir, batchId, vs)
   }
+
+  /** Idempotent merge of one micro-batch into the versioned state: the
+    * batch's winners as a delta, or a compaction into a new full version
+    * once the deltas reach the full version's size
+    * ([[VersionedState.mergeChained]]). */
+  def mergeBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit =
+    VersionedState.mergeChained(batch, batchId, stateDir)(Upsert.lastWriterWins(_))
 
   /** Start the continuous pipeline: envelope stream → optional transform →
     * LWW-merged durable state, checkpointed for resume (T2/T3).

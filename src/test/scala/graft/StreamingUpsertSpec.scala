@@ -168,6 +168,193 @@ class StreamingUpsertSpec extends AnyFunSuite {
     assert(rows.forall(_._3), "hook ran before the state merge")
   }
 
+  // ---- the delta chain: crash/replay spec (TCK-style) ----------------
+
+  private def ev(eid: Long, id: String, op: String, ver: Long,
+                 doc: String = null, ns: String = "app.t0"): ChangeEvent =
+    ChangeEvent(eid, id, "app", ns.stripPrefix("app."), ns, op,
+      1000000L + eid, ver, if (op == "d") null else doc, eid.toDouble, "oplog")
+
+  /** A document of `n` incompressible characters, so version sizes follow
+    * row counts. */
+  private def bulky(seed: Long, n: Int = 400): String = {
+    val r = new scala.util.Random(seed)
+    s"""{"b":"${Seq.fill(n)(r.nextPrintableChar()).filter(_.isLetterOrDigit).mkString}"}"""
+  }
+
+  /** Committed version directories, read from the file system. */
+  private def committed(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.matches("[vd]-?\\d+") &&
+        new java.io.File(f, "_SUCCESS").exists)
+      .map(_.getName).toSet
+
+  private def liveRows(dir: String): Set[(String, String, String, Long, String)] = {
+    import spark.implicits._
+    StreamingUpsert.liveState(spark, dir)
+      .select("namespace", "id", "operation", "version", "document")
+      .as[(String, String, String, Long, String)].collect().toSet
+  }
+
+  /** Batches 0–4 over a tiny first base: v0 (the first merge is full),
+    * d1 (large), v2 (the compaction d1 forces), d3 (larger than v2),
+    * v4 (the second compaction). */
+  private val chainBatches: Seq[Seq[ChangeEvent]] = Seq(
+    Seq(ev(0, "seed", "i", 10, bulky(0, 40))),
+    (1 to 200).map(i => ev(1000 + i, s"a$i", "i", 100 + i, bulky(i))),
+    Seq(ev(2000, "a1", "u", 500, bulky(2000)), ev(2001, "a2", "d", 500)),
+    (1 to 400).map(i => ev(3000 + i, s"b$i", "i", 100 + i, bulky(3000 + i))),
+    Seq(ev(4000, "b1", "d", 900), ev(4001, "a3", "u", 900, bulky(4001))))
+
+  /** Merge (or replay) the given batches of [[chainBatches]]. */
+  private def mergeChain(dir: String, ns: Range): Unit = {
+    import spark.implicits._
+    ns.foreach(n => StreamingUpsert.mergeBatch(chainBatches(n).toDF(), n.toLong, dir))
+  }
+
+  private def expected(ops: Seq[ChangeEvent]) = {
+    import spark.implicits._
+    Upsert.liveDocuments(ops.toDF())
+      .select("namespace", "id", "operation", "version", "document")
+      .as[(String, String, String, Long, String)].collect().toSet
+  }
+
+  test("chain: deltas until they reach the base, then one compaction; GC keeps the previous base and its chain") {
+    val dir = Files.createTempDirectory("graft-chain-layout").toString
+    mergeChain(dir, 0 to 1)
+    assert(committed(dir) == Set("v0", "d1"))
+    mergeChain(dir, 2 to 2)
+    assert(committed(dir) == Set("v0", "d1", "v2"))
+    mergeChain(dir, 3 to 3)
+    assert(committed(dir) == Set("v0", "d1", "v2", "d3"))
+    mergeChain(dir, 4 to 4)
+    // the compaction at 4 deletes what is older than its previous base v2;
+    // v2 and its chain d3 stay for a replay of batch 4
+    assert(committed(dir) == Set("v2", "d3", "v4"))
+    assert(liveRows(dir) == expected(chainBatches.flatten))
+  }
+
+  test("chain: a torn delta is invisible, and the replay of its batch commits it") {
+    val dir = Files.createTempDirectory("graft-chain-torn-delta").toString
+    mergeChain(dir, 0 to 0)
+    val before = liveRows(dir)
+    val torn = java.nio.file.Paths.get(dir, "d1")
+    Files.createDirectories(torn)
+    Files.write(torn.resolve("part-garbage"), Array[Byte](1, 2))
+    assert(liveRows(dir) == before && before.nonEmpty)
+    mergeChain(dir, 1 to 1)
+    assert(committed(dir) == Set("v0", "d1"))
+    assert(liveRows(dir) == expected(chainBatches.take(2).flatten))
+  }
+
+  test("chain: a torn compaction is invisible, and replaying its batch rebuilds it") {
+    val dir = Files.createTempDirectory("graft-chain-torn-full").toString
+    mergeChain(dir, 0 to 1)
+    val before = liveRows(dir)
+    mergeChain(dir, 2 to 2)
+    val after = liveRows(dir)
+    assert(committed(dir).contains("v2") && after != before)
+    // crash mid-write of the compaction: v2 lost its job-commit marker
+    Files.delete(java.nio.file.Paths.get(dir, "v2", "_SUCCESS"))
+    assert(liveRows(dir) == before)
+    mergeChain(dir, 2 to 2)
+    assert(committed(dir) == Set("v0", "d1", "v2"))
+    assert(liveRows(dir) == after && after == expected(chainBatches.take(3).flatten))
+  }
+
+  test("chain: replaying a delta batch or a compacting batch leaves the state unchanged") {
+    val dir = Files.createTempDirectory("graft-chain-replay").toString
+    mergeChain(dir, 0 to 3)
+    val once = liveRows(dir)
+    mergeChain(dir, 3 to 3) // a delta
+    assert(committed(dir) == Set("v0", "d1", "v2", "d3"))
+    assert(liveRows(dir) == once)
+    mergeChain(dir, 4 to 4)
+    val compacted = liveRows(dir)
+    mergeChain(dir, 4 to 4) // a compaction
+    assert(committed(dir) == Set("v2", "d3", "v4"))
+    assert(liveRows(dir) == compacted && compacted == expected(chainBatches.flatten))
+  }
+
+  test("chain: a committed delta newer than the incoming batch is a loud error") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-chain-newer").toString
+    mergeChain(dir, 0 to 1)
+    assert(committed(dir) == Set("v0", "d1"))
+    // only the delta d1 is newer than batch 0
+    val e = intercept[IllegalArgumentException](
+      StreamingUpsert.mergeBatch(chainBatches(0).toDF(), 0L, dir))
+    assert(e.getMessage.contains("further-progressed"))
+  }
+
+  test("chain: 32 batches across compactions equal the batch LWW over all ops") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-chain-equiv").toString
+    val rnd = new scala.util.Random(7)
+    val ids = (0 until 12).map(i => s"k$i")
+    var eid = 0L
+    def next(id: String, op: String, ver: Long, ns: String = "app.t0") = {
+      eid += 1
+      ev(eid, id, op, ver, if (op == "d") null else bulky(eid, 60), ns)
+    }
+    val batches = (0 until 32).map { n =>
+      val plain = (0 until 6).map { _ =>
+        val op = Seq("i", "u", "u", "d")(rnd.nextInt(4))
+        next(ids(rnd.nextInt(ids.size)), op, rnd.nextInt(5000).toLong,
+          Seq("app.t0", "app.t1")(rnd.nextInt(2)))
+      }
+      val special = n match {
+        // a delete of "phoenix", and its re-insert after later compactions
+        case 1 => Seq(next("phoenix", "i", 10), next("phoenix", "d", 20))
+        case 29 => Seq(next("phoenix", "i", 30))
+        // equal versions: the greater event_id wins, whichever arrives first
+        case 2 => Seq(next("tie-a", "u", 7000), next("tie-b", "u", 7000))
+        case 25 =>
+          Seq(ev(0L, "tie-a", "u", 7000, "{\"late\":1}"),
+            next("tie-b", "u", 7000))
+        // id-less control rows share the (namespace, null) key
+        case 4 | 17 | 28 => Seq(next(null, "drop_coll", n.toLong, "app.t9"))
+        case _ => Nil
+      }
+      plain ++ special
+    }
+    val compactions = batches.zipWithIndex.flatMap { case (b, n) =>
+      StreamingUpsert.mergeBatch(b.toDF(), n.toLong, dir)
+      if (committed(dir).contains(s"v$n")) Some(n) else None
+    }
+    assert(compactions.count(n => n > 1 && n <= 29) >= 2,
+      s"compactions at ${compactions.mkString(",")}")
+    val all = batches.flatten
+    assert(liveRows(dir) == expected(all))
+    // the whole state, tombstones and control rows included
+    val key = Seq("namespace", "id", "operation", "version", "event_id")
+    def whole(df: org.apache.spark.sql.DataFrame) =
+      df.select(key.map(col): _*).as[(String, String, String, Long, Long)]
+        .collect().toSet
+    val state = whole(StreamingUpsert.latestState(spark, dir).get)
+    assert(state == whole(Upsert.lastWriterWins(all.toDF())))
+    assert(state.contains(("app.t9", null, "drop_coll", 28L, all.filter(_.id == null).last.event_id)))
+    assert(state.exists(r => r._2 == "phoenix" && r._3 == "i" && r._4 == 30L))
+    assert(state.exists(r => r._2 == "tie-a" && r._5 != 0L))
+  }
+
+  test("seedState into a dir that already holds a committed version is a loud error") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-seed-shadowed").toString
+    StreamingUpsert.mergeBatch(mkOps(20).toDF(), 0L, dir)
+    val e = intercept[IllegalArgumentException](
+      StreamingUpsert.seedState(mkOps(40).toDF(), dir))
+    assert(e.getMessage.contains("v0"))
+    // a delta counts as well
+    val dir2 = Files.createTempDirectory("graft-seed-shadowed-delta").toString
+    mergeChain(dir2, 0 to 1)
+    Files.walk(java.nio.file.Paths.get(dir2, "v0")).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    assert(committed(dir2) == Set("d1"))
+    intercept[IllegalArgumentException](
+      StreamingUpsert.seedState(mkOps(40).toDF(), dir2))
+  }
+
   test("keyed-state winners stream equals batch winners (T6)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
